@@ -43,7 +43,7 @@ def _transcript_rows(sf: float) -> int:
 
 def _warmup(spark) -> None:
     """Spawn/warm the Python UDF workers and the JVM codegen/JIT for both
-    parse engines before timing: a steady-state cluster does not pay
+    wire formats before timing: a steady-state cluster does not pay
     worker cold-start or Janino/C2 compilation per job, and including it
     would make the scaling measurement a measure of process spawning."""
     from go_parsesyslog_spark.operators.parse import parse_logs
@@ -53,15 +53,14 @@ def _warmup(spark) -> None:
         "concat('<34>Oct 11 22:14:15 h app[1]: x ', id) AS text"
     )
     w5 = spark.range(0, 20_000, 1, par).selectExpr(
-        "concat(cast(47 + length(cast(id as string)) as string),"
+        "concat(cast(52 + length(cast(id as string)) as string),"
         " ' <34>1 2024-01-02T03:04:05Z h a p m [x@1 k=\"v\"] body ', id)"
         " AS text"
     )
     for wdf in (w3, w5):
-        for eng in ("arrow", "native"):
-            parse_logs(wdf, fmt="auto", engine=eng).write.format(
-                "noop"
-            ).mode("overwrite").save()
+        parse_logs(wdf, fmt="auto").write.format("noop").mode(
+            "overwrite"
+        ).save()
 
 
 def ensure_transcripts(sf: float, n_files: int = 64) -> str:
@@ -117,9 +116,9 @@ def parse_microbench(spark, rows: int = 4_000_000) -> dict:
     """Per-core parse throughput on canonical wire messages — the
     apples-to-apples line against the reference's ns/op numbers
     (BASELINE.md: RFC3164 490ns/op ≈ 2.04M msg/s/core, RFC5424
-    1433ns/op ≈ 698k msg/s/core).  Measures the steady-state native
-    engine end-to-end through Spark (scan-equivalent range source →
-    parse → noop), not a stripped inner loop."""
+    1433ns/op ≈ 698k msg/s/core).  Measures the steady-state parse
+    end-to-end through Spark (scan-equivalent range source → parse →
+    noop), not a stripped inner loop."""
     import time as _t
 
     from go_parsesyslog_spark.operators.parse import parse_logs
@@ -133,7 +132,7 @@ def parse_microbench(spark, rows: int = 4_000_000) -> dict:
             " ']: message body number ', cast(id as string)) AS text"
         ),
         "rfc5424": (
-            "concat(cast(66 + length(cast(id as string)) as string),"
+            "concat(cast(77 + length(cast(id as string)) as string),"
             " ' <165>1 2024-01-02T03:04:05.006Z host app proc msgid"
             " [ex@1 k=\"v\"] body number ', cast(id as string)) AS text"
         ),
@@ -188,34 +187,6 @@ def pinned_microbench(cpus: int = 2) -> dict:
     return json.loads(line)
 
 
-def native_coverage(spark, input_path: str) -> dict:
-    """Bench hygiene: what fraction of the pipeline's transcript input
-    the JVM-native fast path handles (rows NOT taking the Arrow/Python
-    slow branch) — makes an engine regression visible in BENCH_r*.json
-    instead of silently shifting work to Python."""
-    from pyspark.sql import functions as F
-
-    from go_parsesyslog_spark.operators import native_fast as nf
-
-    df = spark.read.parquet(input_path).select("text")
-    framed = F.col("text").rlike(r"^[0-9]+ ")
-    fast = F.coalesce(
-        F.when(framed, nf.native_5424_mask(F.col("text"))).otherwise(
-            nf.native_3164_mask(F.col("text"))
-        ),
-        F.lit(False),
-    )
-    agg = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(fast.cast("int")).alias("fast"),
-    ).collect()[0]
-    return {
-        "rows": int(agg["n"]),
-        "native_fast_rows": int(agg["fast"]),
-        "native_fast_frac": round(agg["fast"] / max(1, agg["n"]), 4),
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -252,9 +223,12 @@ def main() -> None:
         "turns_per_sec": round(rows / best_s, 1),
         "pipeline_runs": pipeline_runs,
         "cpus": cpus,
-        "parse_engine": os.environ.get("SPARK_GRAFT_PARSE_ENGINE", "native"),
+        "parse_engine": "arrow",
         "query_timing": "second run (steady state; run 1 warms codegen)",
-        "native_coverage": native_coverage(spark, ensure_transcripts(sf)),
+        # one parse engine: no row takes a JVM-native path; the keys
+        # keep the record's shape
+        "native_coverage": {"rows": rows, "native_fast_rows": 0,
+                            "native_fast_frac": 0.0},
         "parse_microbench": parse_microbench(spark),
     }
     # drain any still-active streaming machinery before JVM shutdown so

@@ -19,6 +19,7 @@ cells.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,49 +126,36 @@ def compute_hot_set(
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_rows"))
         # one input scan feeds both the stats agg and the hot filter:
-        # without this the two driver actions below each re-scan the
-        # full input to rebuild the (conv_id, _rows) aggregate
-        .localCheckpoint()
+        # without this the driver actions below each re-scan the full
+        # input to rebuild the (conv_id, _rows) aggregate
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    stats = conv_counts.agg(
-        F.avg("_rows").alias("mean"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("_rows").alias("mx"),
-    ).collect()[0]
-    if hot_threshold is None:
-        hot_threshold = max(64, int(4 * (stats["mean"] or 1)))
-    max_rows = int(stats["mx"] or 0)
-    total_rows = int(round((stats["mean"] or 0) * (stats["n"] or 0)))
-    hot = conv_counts.filter(F.col("_rows") > hot_threshold).select("conv_id")
-    head = [r["conv_id"] for r in hot.limit(literal_cap + 1).collect()]
-    if len(head) <= literal_cap:
-        return {"threshold": hot_threshold, "count": len(head),
-                "ids": head, "path": None,
-                "max_conv_rows": max_rows, "total_rows": total_rows}
-    if spill_path is None:
-        raise ValueError(
-            f"hot set exceeds literal cap ({literal_cap}); pass spill_path "
-            "for the broadcast-join route"
-        )
-    hot.coalesce(1).write.mode("overwrite").parquet(spill_path)
+    try:
+        stats = conv_counts.agg(
+            F.avg("_rows").alias("mean"),
+            F.sum("_rows").alias("total"),
+            F.max("_rows").alias("mx"),
+        ).collect()[0]
+        if hot_threshold is None:
+            hot_threshold = max(64, int(4 * (stats["mean"] or 1)))
+        sizes = {"max_conv_rows": int(stats["mx"] or 0),
+                 "total_rows": int(stats["total"] or 0)}
+        hot = conv_counts.filter(F.col("_rows") > hot_threshold).select("conv_id")
+        head = [r["conv_id"] for r in hot.limit(literal_cap + 1).collect()]
+        if len(head) <= literal_cap:
+            return {"threshold": hot_threshold, "count": len(head),
+                    "ids": head, "path": None, **sizes}
+        if spill_path is None:
+            raise ValueError(
+                f"hot set exceeds literal cap ({literal_cap}); pass spill_path "
+                "for the broadcast-join route"
+            )
+        hot.coalesce(1).write.mode("overwrite").parquet(spill_path)
+    finally:
+        conv_counts.unpersist()
     n = df.sparkSession.read.parquet(spill_path).count()
     return {"threshold": hot_threshold, "count": n, "ids": None,
-            "path": spill_path,
-            "max_conv_rows": max_rows, "total_rows": total_rows}
-
-
-def hot_conv_ids(
-    df: DataFrame, hot_threshold: int | None = None, cap: int = 100_000
-) -> tuple[list, int]:
-    """Deprecated small-scale helper (kept for API compat): collect the
-    hot set as a list.  Prefer ``compute_hot_set`` — it spills oversized
-    hot sets for the broadcast-join route instead of truncating."""
-    conv_counts = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("_rows"))
-    if hot_threshold is None:
-        mean = conv_counts.agg(F.avg("_rows")).collect()[0][0]
-        hot_threshold = max(64, int(4 * (mean or 1)))
-    hot = conv_counts.filter(F.col("_rows") > hot_threshold)
-    return [r["conv_id"] for r in hot.limit(cap).collect()], hot_threshold
+            "path": spill_path, **sizes}
 
 
 def write_routed(

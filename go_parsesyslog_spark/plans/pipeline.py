@@ -231,9 +231,9 @@ def run_pipeline(
     # spread).  The salt COLUMN itself is untouched either way.
     target = int(os.environ.get("SPARK_GRAFT_SALT_TARGET_ROWS", 1_000_000))
     max_conv = int(hot_set.get("max_conv_rows") or 0)
-    total_rows_est = int(hot_set.get("total_rows") or 0)
+    total_rows = int(hot_set.get("total_rows") or 0)
     n_cells = max(1, n_buckets)  # sev classes x conv buckets >= n_buckets
-    mean_cell = total_rows_est / max(1, len(pending) or 1) / n_cells
+    mean_cell = total_rows / max(1, len(pending) or 1) / n_cells
     need = max(
         -(-max_conv // target),          # ceil
         -(-int(mean_cell) // target),

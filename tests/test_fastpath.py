@@ -97,6 +97,25 @@ def test_mutated_lines(seed):
     _check_5424(mut5)
 
 
+def test_newline_terminated_frames():
+    """Octet framing counts a terminating \\n into the frame, so every
+    message read from an octet file ends with one: each framing-outcome
+    class must parse byte-identically to the exact parser."""
+    hdr = "<165>1 2024-01-02T03:04:05Z host app proc mid [ex@1 k=\"v\"] "
+    body = "hello world #42\n"
+    content = hdr + body
+    exact = f"{len(content)} {content}"
+    _check_5424([
+        exact,                                    # exact frame incl. \n
+        f"{len(content) + 1} {content}",          # short read → premature_eof
+        f"{len(content) - 4} {content}",          # truncated body
+        f"{len(hdr) + 2} {hdr}x\n",               # body < 3 → early accept
+        f"{len(hdr) + 1} {hdr}\n",                # bare \n body → early
+        f"{len(content)} {hdr}hello\nworld\n",    # interior \n
+        exact.rstrip("\n"),                       # no newline: unchanged
+    ])
+
+
 def test_fast_path_actually_used():
     """Guard against silently losing the fast path: canonical generated
     traffic must be predominantly fast-matched."""

@@ -1,10 +1,6 @@
-"""Differential tests: the JVM-native fast path (+ Python fallback)
-must produce identical results to the all-Python exact engine on corpus
-lines, generated traffic, and mutations."""
+"""Plan-level tests of ``parse_logs``: the parse is one narrow Arrow
+projection, and predicates over its output columns are safe."""
 
-import random
-
-import pytest
 from pyspark.sql import functions as F
 
 from go_parsesyslog_spark.corpus import (
@@ -12,112 +8,23 @@ from go_parsesyslog_spark.corpus import (
     RFC5424_INVALID,
     RFC5424_VALID,
 )
-from go_parsesyslog_spark.operators.parse import parse_logs, parse_logs_arrow
+from go_parsesyslog_spark.operators.parse import parse_logs
 from go_parsesyslog_spark.operators.parse_rfc3164 import DEFAULT_REF_NOW
 from go_parsesyslog_spark.sources.transcripts import generate_transcripts
-
-CMP_COLS = [
-    "i", "format", "priority", "facility", "severity", "proto_version",
-    "msg_ts", "host", "app", "pid", "msgid", "has_bom", "message",
-    "msg_length", "err_code", "sd_json",
-]
-
-
-def _both(spark, lines, fmt):
-    df = spark.createDataFrame(
-        [(i, ln) for i, ln in enumerate(lines)], "i int, text string"
-    )
-    out = {}
-    for engine in ("native", "arrow"):
-        r = parse_logs(df, fmt=fmt, ref_now=DEFAULT_REF_NOW, engine=engine)
-        r = r.withColumn("sd_json", F.to_json("structured_data"))
-        out[engine] = {
-            row["i"]: row for row in r.select(*CMP_COLS).collect()
-        }
-    return out
-
-
-def _assert_equal(spark, lines, fmt):
-    res = _both(spark, lines, fmt)
-    assert len(res["native"]) == len(lines)
-    for i in range(len(lines)):
-        n, a = res["native"][i], res["arrow"][i]
-        for c in CMP_COLS:
-            assert n[c] == a[c], (
-                f"row {i} col {c}: native={n[c]!r} arrow={a[c]!r} "
-                f"line={lines[i]!r}"
-            )
-
-
-def test_corpus_3164_native(spark):
-    _assert_equal(spark, [c[1] for c in RFC3164_CASES], "rfc3164")
-
-
-def test_corpus_5424_native(spark):
-    _assert_equal(spark, RFC5424_VALID + RFC5424_INVALID, "rfc5424")
-
-
-def test_generated_auto_native(spark):
-    df = generate_transcripts(8000, seed=77)
-    _assert_equal(spark, df.text.tolist(), "auto")
-
-
-@pytest.mark.parametrize("seed", [0, 1])
-def test_mutations_native(spark, seed):
-    rng = random.Random(seed)
-    base = [c[1] for c in RFC3164_CASES if c[2]] + RFC5424_VALID
-    charset = "<>[]:\"\\ -.0123456789aZ\né"
-    muts = []
-    for _ in range(300):
-        line = rng.choice(base)
-        i = rng.randrange(len(line))
-        muts.append(line[:i] + rng.choice(charset) + line[i + 1:])
-    _assert_equal(spark, muts, "auto")
-
-
-def test_newline_terminated_frames_native(spark):
-    """Octet framing counts a terminating \\n into the frame, so every
-    message read from an octet file ends with one.  The native pattern
-    captures that newline into the body (like the 3164 pattern always
-    has) — these rows must parse natively AND byte-identically to the
-    exact Python engine across every framing-outcome class."""
-    from go_parsesyslog_spark.operators.native_fast import native_5424_mask
-
-    hdr = "<165>1 2024-01-02T03:04:05Z host app proc mid [ex@1 k=\"v\"] "
-    body = "hello world #42\n"
-    content = hdr + body
-    exact = f"{len(content)} {content}"
-    lines = [
-        exact,                                    # exact frame incl. \n
-        f"{len(content) + 1} {content}",          # short read → premature_eof
-        f"{len(content) - 4} {content}",          # truncated body
-        f"{len(hdr) + 2} {hdr}x\n",               # body < 3 → early accept
-        f"{len(hdr) + 1} {hdr}\n",                # bare \n body → early
-        f"{len(content)} {hdr}hello\nworld\n",    # interior \n → Python path
-        exact.rstrip("\n"),                       # no newline: unchanged
-    ]
-    _assert_equal(spark, lines, "rfc5424")
-    # the canonical single-trailing-newline rows must take the JVM path
-    df = spark.createDataFrame([(ln,) for ln in lines[:5]], "text string")
-    n_native = df.select(
-        native_5424_mask(F.col("text")).alias("ok")
-    ).filter("ok").count()
-    assert n_native == 5, n_native
 
 
 def test_native_filter_explode_after_parse(spark):
     """Regression (round-1 crash): Catalyst pushes predicates derived
-    from parsed columns (e.g. the implicit filter of explode) below the
-    fast-path mask filter, evaluating field expressions on rows the mask
-    excludes.  All field exprs must be TOTAL (try_element_at/try_cast)
-    so this can never raise INVALID_ARRAY_INDEX_IN_ELEMENT_AT."""
+    from parsed columns (e.g. the implicit filter of explode) through
+    the parse projection.  Filtering on a parsed column and exploding
+    the nested SD must work on a mixed valid/invalid table."""
     lines = RFC5424_VALID + RFC5424_INVALID + [c[1] for c in RFC3164_CASES]
     df = spark.createDataFrame(
         [(i, ln) for i, ln in enumerate(lines)], "i int, text string"
     )
-    r = parse_logs(df, fmt="auto", ref_now=DEFAULT_REF_NOW, engine="native")
+    r = parse_logs(df, fmt="auto", ref_now=DEFAULT_REF_NOW)
     # filter on a parsed column, then explode the nested SD — both get
-    # pushed/collapsed through the fast-path projections
+    # pushed/collapsed through the parse projection
     exploded = (
         r.filter(F.col("i") >= 0)
         .filter(F.col("err_code").isNull())
@@ -131,38 +38,18 @@ def test_native_filter_explode_after_parse(spark):
     assert n > 0
 
 
-def test_native_covers_most_canonical_traffic(spark):
-    """The point of the native path: canonical rows must NOT fall through
-    to Python."""
-    from go_parsesyslog_spark.operators.native_fast import (
-        native_3164_mask,
-        native_5424_mask,
-    )
-
-    df = generate_transcripts(5000, seed=5, corpus_frac=0.0)
-    sdf = spark.createDataFrame(df[["text"]], "text string")
-    framed = F.col("text").rlike(r"^[0-9]+ ")
-    covered = sdf.select(
-        F.when(framed, native_5424_mask(F.col("text")))
-        .otherwise(native_3164_mask(F.col("text")))
-        .alias("ok")
-    )
-    frac = covered.filter("ok").count() / 5000
-    assert frac > 0.95, frac
-
-
-def test_native_parse_single_scan(spark):
-    """VERDICT r2 #4: the native engine must scan its input ONCE — the
-    fast and slow branches share one materialized exchange (runtime
-    ReusedExchange), not two independent source scans."""
+def test_parse_is_one_arrow_projection(spark):
+    """A mixed-format parse is one shuffle-free projection: no Exchange
+    and exactly one ArrowEvalPython in the executed plan, also when a
+    filter or an explode over parsed columns follows it."""
     df = generate_transcripts(2000, seed=9, corpus_frac=0.1)
     sdf = spark.createDataFrame(df[["text"]], "text string")
-    parsed = parse_logs(sdf, fmt="auto", engine="native")
-    parsed.collect()  # materialize THIS plan so AQE finalizes it
-    plan = parsed._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in final, final
-    assert final.count("ReusedExchange") >= 1, final
-    # the 16x-per-output-column rlike discriminator must stay a single
-    # materialized projection, not get inlined per reference
-    assert final.count("RLIKE") <= 3, final.count("RLIKE")
+    parsed = parse_logs(sdf, fmt="auto")
+    exploded = parsed.filter(F.col("err_code").isNull()).select(
+        F.explode("structured_data").alias("sd")
+    )
+    for out in (parsed, exploded):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 0, plan
+        assert plan.count("ArrowEvalPython") == 1, plan

@@ -206,6 +206,31 @@ def test_hot_set_spills_and_broadcast_joins(spark, tmp_path_factory):
     assert small["path"] is None and small["ids"] == ["c1"]
 
 
+def test_hot_set_releases_its_cache(spark, tmp_path_factory):
+    """compute_hot_set caches its per-conversation counts for its own
+    driver actions only: no persisted RDD may outlive the call, on the
+    literal route or the spill route."""
+    from go_parsesyslog_spark.operators.route import compute_hot_set
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    df = spark.range(0, 600).select(
+        F.concat(F.lit("c"), (F.col("id") % 200).cast("string")).alias(
+            "conv_id"
+        )
+    )
+    before = persisted()
+    small = compute_hot_set(df, hot_threshold=2)
+    assert small["count"] == 200 and small["total_rows"] == 600
+    assert persisted() == before
+    spill = str(tmp_path_factory.mktemp("hotcache")) + "/hot"
+    big = compute_hot_set(df, hot_threshold=2, spill_path=spill,
+                          literal_cap=10)
+    assert big["path"] == spill and big["count"] == 200
+    assert persisted() == before
+
+
 def test_salting_splits_hot_conversations(spark, input_dir):
     df = spark.read.parquet(input_dir)
     parsed = parse_logs(df, fmt="auto", ref_now=REF_NOW)

@@ -7,7 +7,6 @@ job covers ~50 cases; a handful of examples keeps wall time sane while
 shrinking still isolates single failing messages."""
 
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -82,17 +81,16 @@ def rfc5424_case(draw):
     return wire, want
 
 
-@pytest.mark.parametrize("engine", ["native", "arrow"])
 @settings(max_examples=4, deadline=None,
           suppress_health_check=list(HealthCheck))
 @given(st.lists(rfc3164_case(), min_size=20, max_size=50))
-def test_rfc3164_roundtrip_property(spark, engine, cases):
+def test_rfc3164_roundtrip_property(spark, cases):
     from go_parsesyslog_spark.operators.parse import parse_logs
 
     df = spark.createDataFrame(
         [(i, w) for i, (w, _) in enumerate(cases)], "i long, text string"
     )
-    p = parse_logs(df, fmt="rfc3164", ref_now=REF_NOW, engine=engine)
+    p = parse_logs(df, fmt="rfc3164", ref_now=REF_NOW)
     rows = {r["i"]: r for r in p.withColumn(
         "ts_str", F.date_format("msg_ts", "yyyy-MM-dd HH:mm:ss")
     ).collect()}
@@ -106,17 +104,16 @@ def test_rfc3164_roundtrip_property(spark, engine, cases):
         assert r["msg_length"] == len(want["message"])
 
 
-@pytest.mark.parametrize("engine", ["native", "arrow"])
 @settings(max_examples=4, deadline=None,
           suppress_health_check=list(HealthCheck))
 @given(st.lists(rfc5424_case(), min_size=20, max_size=50))
-def test_rfc5424_roundtrip_property(spark, engine, cases):
+def test_rfc5424_roundtrip_property(spark, cases):
     from go_parsesyslog_spark.operators.parse import parse_logs
 
     df = spark.createDataFrame(
         [(i, w) for i, (w, _) in enumerate(cases)], "i long, text string"
     )
-    p = parse_logs(df, fmt="rfc5424", engine=engine)
+    p = parse_logs(df, fmt="rfc5424")
     rows = {r["i"]: r for r in p.withColumn(
         "ts_str", F.date_format("msg_ts", "yyyy-MM-dd HH:mm:ss")
     ).select(
