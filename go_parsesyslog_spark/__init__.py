@@ -11,7 +11,7 @@ horizontally on a Spark cluster.
 
 Layout
 ------
-``functions/``   scalar derivations (PRI arithmetic, name tables, text stats)
+``functions/``   scalar derivations (name tables, text stats)
 ``operators/``   DataFrame → DataFrame operators (parse, enrich, route, agg,
                  dedup, similarity)
 ``sources/``     transcript datagen + table loaders

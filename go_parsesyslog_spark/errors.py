@@ -31,19 +31,6 @@ ERR_INVALID_NUMBER = "invalid_number"
 # rfc5424.go:106 ErrInvalidLength — framed length did not reconcile
 ERR_INVALID_LENGTH = "invalid_length"
 
-ALL_ERR_CODES = (
-    ERR_INVALID_PRIO,
-    ERR_INVALID_PROTO_VERSION,
-    ERR_INVALID_TIMESTAMP,
-    ERR_PARSER_TYPE_UNKNOWN,
-    ERR_PREMATURE_EOF,
-    ERR_WRONG_FORMAT,
-    ERR_WRONG_SD_FORMAT,
-    ERR_INVALID_NUMBER,
-    ERR_INVALID_LENGTH,
-)
-
-
 class ParserTypeUnknown(ValueError):
     """Raised by the registry when an unregistered parser type is requested.
 

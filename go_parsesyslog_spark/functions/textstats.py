@@ -1,5 +1,5 @@
 """Text analysis for training-data pipelines: language ID, quality
-scoring, token counting, fingerprinting.
+scoring, token counting.
 
 Everything except language ID is pure Catalyst column expressions
 (codegen'd, zero Python).  Language ID is a character-n-gram/stopword
@@ -95,14 +95,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("quality_score", F.round(score, 4)).withColumn(
         "quality_keep", F.col("quality_score") >= 0.5
     )
-
-
-def rolling_fingerprint(text: Column, window: int = 64) -> Column:
-    """Content-defined document fingerprint: xxhash64 of the
-    whitespace-normalized text (cheap, JVM-side).  For shift-robust
-    fingerprints use dedup.minhash_signatures."""
-    norm = F.regexp_replace(F.lower(text), r"\s+", " ")
-    return F.xxhash64(norm)
 
 
 def language_id_udf():

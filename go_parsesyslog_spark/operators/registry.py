@@ -52,9 +52,5 @@ def new(parser_type: str) -> BatchParser:
         raise ParserTypeUnknown(f"unknown parser type: {parser_type!r}") from None
 
 
-def registered_types() -> list[str]:
-    return sorted(_REGISTRY)
-
-
 register(RFC3164, parse_rfc3164_batch)
 register(RFC5424, parse_rfc5424_batch)

@@ -156,32 +156,3 @@ def compute_hot_set(
     n = df.sparkSession.read.parquet(spill_path).count()
     return {"threshold": hot_threshold, "count": n, "ids": None,
             "path": spill_path, **sizes}
-
-
-def write_routed(
-    df: DataFrame,
-    out_root: str,
-    shuffle_partitions: int | None = None,
-) -> None:
-    """Fan-out partitioned write: valid rows under ``routed/`` partitioned
-    by (severity_class, conv_bucket); err rows under ``dlq/`` partitioned
-    by err_code.  The repartition key includes the salt so hot cells are
-    written by multiple tasks (multiple files per dir — fine for
-    columnar readers, fatal to avoid stragglers)."""
-    spark = df.sparkSession
-    n = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    valid = df.filter(F.col("err_code").isNull())
-    (
-        valid.repartition(n, "severity_class", "conv_bucket", "salt")
-        .write.mode("overwrite")
-        .partitionBy("severity_class", "conv_bucket")
-        .parquet(f"{out_root}/routed")
-    )
-    dlq = df.filter(F.col("err_code").isNotNull())
-    (
-        dlq.repartition("err_code")
-        .write.mode("overwrite")
-        .partitionBy("err_code")
-        .parquet(f"{out_root}/dlq")
-    )
